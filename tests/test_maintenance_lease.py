@@ -434,3 +434,14 @@ def test_local_lease_path_parses_file_uris():
     assert D._local_lease_path("file:///tmp/a%20b") == "/tmp/a b"
     assert D._local_lease_path("hdfs://nn/tmp/x") is None
     assert D._local_lease_path("s3a://bucket/k") is None
+
+
+def test_local_lease_path_defers_query_and_fragment_to_hadoop():
+    """``?`` and ``#`` are legal file-name characters to Hadoop's Path,
+    but urllib splits them off as a query or fragment.  Resolving such
+    a URI locally would lock a different file than a Hadoop client
+    does, so it falls through to Hadoop (None)."""
+    assert D._local_lease_path("file:/tmp/x#y") is None
+    assert D._local_lease_path("file:///tmp/x?v=1") is None
+    assert D._local_lease_path("file:/tmp/x#") is None
+    assert D._local_lease_path("file:/tmp/x") == "/tmp/x"

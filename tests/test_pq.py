@@ -262,3 +262,30 @@ def test_ivfadc_rerank_refines_shortlist(spark, sf_dir):
             6,
         )
         assert abs(r["exact_d"] - want) < 1e-9, (r, want)
+
+
+def test_ivfpq_rows_absent_subspace_code_is_typed(spark, tmp_path):
+    """A code column whose subspace is absent from the codebooks is a
+    null typed as the cluster column, so the index frame writes to
+    parquet (an untyped NullType column cannot be written)."""
+    from trade_data_collection_service_spark.ext.pq import _ivfpq_rows
+
+    vec = "vec_id long, emb array<double>"
+    source = spark.createDataFrame(
+        [(1, [0.0, 0.1, 0.9, 1.0]), (2, [1.0, 0.9, 0.1, 0.0])], vec
+    )
+    centroids = spark.createDataFrame(
+        [(0, [0.0, 0.0, 1.0, 1.0]), (1, [1.0, 1.0, 0.0, 0.0])], vec
+    )
+    # codewords for subspace 0 only; subspace 1 is absent
+    codebooks = spark.createDataFrame(
+        [(0, 0, [0.0, 0.0]), (0, 1, [1.0, 1.0])],
+        "subspace int, cluster int, centroid array<double>",
+    )
+    out = str(tmp_path / "ivfpq_rows")
+    _ivfpq_rows(source, centroids, codebooks, m=2).write.parquet(out)
+    back = spark.read.parquet(out)
+    assert dict(back.dtypes)["code1"] == dict(codebooks.dtypes)["cluster"]
+    rows = {r["vec_id"]: r for r in back.collect()}
+    assert [rows[v]["code1"] for v in (1, 2)] == [None, None]
+    assert [rows[v]["code0"] for v in (1, 2)] == [0, 1]

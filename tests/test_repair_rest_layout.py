@@ -1,6 +1,8 @@
+import os
 import shutil
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from trade_data_collection_service_spark.candles import (
@@ -91,3 +93,53 @@ def test_layout_partition_pruning_and_compaction(spark, sf_dir):
         assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_compact_leaves_session_conf_unchanged(spark, sf_dir):
+    """compact() publishes by directory rename; it must not switch the
+    session's partitionOverwriteMode to dynamic, which would leak into
+    every later overwrite in the session."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prior = spark.conf.get(key)
+    tmp = tempfile.mkdtemp(prefix="compact_conf_")
+    try:
+        spark.conf.set(key, "STATIC")
+        candles = candles_with_duplicates(spark, sf_dir)
+        write_candles(candles, tmp, mode="overwrite")
+        compact(spark, tmp)
+        assert spark.conf.get(key) == "STATIC"
+        compacted = spark.read.parquet(tmp).drop("month")
+        assert compacted.count() == dedup_latest(candles).count()
+    finally:
+        spark.conf.set(key, prior)
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_compact_rolls_a_crashed_publish_forward(spark, sf_dir, monkeypatch):
+    """A compact() that crashes after staging leaves a ``_SUCCESS``
+    stage; the next compact() on the table publishes it first, so the
+    table ends deduped and the stage is gone."""
+    import trade_data_collection_service_spark.streaming.pipeline as P
+
+    tmp = tempfile.mkdtemp(prefix="compact_crash_")
+    try:
+        candles = candles_with_duplicates(spark, sf_dir)
+        write_candles(candles, tmp, mode="overwrite")
+
+        def crash_publish(spark_, stage, path):
+            raise RuntimeError("injected crash before publish")
+
+        monkeypatch.setattr(P, "_publish_stage", crash_publish)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            compact(spark, tmp)
+        assert os.path.exists(tmp + ".stage/_SUCCESS")
+        monkeypatch.undo()
+
+        compact(spark, tmp)
+        assert not os.path.exists(tmp + ".stage")
+        a = spark.read.parquet(tmp).drop("month")
+        b = dedup_latest(candles)
+        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+        shutil.rmtree(tmp + ".stage", ignore_errors=True)

@@ -56,6 +56,24 @@ def stream_dirs(spark, sf_dir):
     shutil.rmtree(tmp, ignore_errors=True)
 
 
+def test_batch_jobs_are_tagged_per_level(stream_dirs):
+    """Every micro-batch's jobs carry ``candles batch <id> raw`` for the
+    raw append and ``candles batch <id> L<m>`` for each level, so a
+    run's job list attributes its time without a probe."""
+    import json
+    import urllib.request
+
+    spark = stream_dirs[0]
+    sc = spark.sparkContext
+    url = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}/jobs"
+    with urllib.request.urlopen(url) as resp:
+        descs = {j.get("description") for j in json.load(resp)}
+    for batch_id in range(3):
+        assert f"candles batch {batch_id} raw" in descs
+        for m in LEVELS:
+            assert f"candles batch {batch_id} L{m}" in descs, (batch_id, m)
+
+
 def test_streamed_raw_matches_batch(stream_dirs):
     spark, out, candles = stream_dirs
     streamed = dedup_latest(spark.read.parquet(f"{out}/candles_raw"))

@@ -301,3 +301,201 @@ def test_replay_after_crash_mid_publish_commit(spark, monkeypatch):
         assert stored.filter("symbol = 'ETH-USDT'").count() == 20
     finally:
         shutil.rmtree(dirs, ignore_errors=True)
+
+
+def _three_month_history(spark, dirs):
+    """Raw + every level over Jan, Feb and Mar 2024; returns
+    (raw_path, {month: first candle start})."""
+    raw_path = os.path.join(dirs, "candles_raw")
+    months = {
+        1: dt.datetime(2024, 1, 5, 8, 0, tzinfo=UTC),
+        2: dt.datetime(2024, 2, 14, 11, 0, tzinfo=UTC),
+        3: dt.datetime(2024, 3, 21, 16, 0, tzinfo=UTC),
+    }
+    batch = spark.createDataFrame(
+        [
+            _candle(sym, t0 + dt.timedelta(minutes=i), p + i)
+            for sym, p in (("BTC-USDT", 100.0), ("ETH-USDT", 50.0))
+            for t0 in months.values()
+            for i in range(20)
+        ],
+        CANDLE_SCHEMA,
+    )
+    batch.write.mode("append").parquet(raw_path)
+    upsert_rollup_levels(spark, raw_path, batch, dirs, LEVELS)
+    return raw_path, months
+
+
+class _PublishCrash:
+    """Hadoop FileSystem proxy that raises on its ``crash_at``-th
+    delete-or-rename call (0-based, counted across proxies)."""
+
+    def __init__(self, fs, calls: list[int], crash_at: int):
+        self._fs, self._calls, self._crash_at = fs, calls, crash_at
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+    def _step(self, op, *args):
+        if self._calls[0] == self._crash_at:
+            raise RuntimeError("injected crash inside the publish")
+        self._calls[0] += 1
+        return getattr(self._fs, op)(*args)
+
+    def delete(self, *args):
+        return self._step("delete", *args)
+
+    def rename(self, *args):
+        return self._step("rename", *args)
+
+
+# The 1m level's publish of a two-month stage runs delete(live A),
+# rename(A), delete(live B), rename(B).  Crash at step 1: A's live
+# copy is gone and not yet replaced.  Crash at step 2: A is swapped,
+# B is untouched.
+@pytest.mark.parametrize(
+    "crash_at", [1, 2], ids=["deleted_not_replaced", "first_swapped"]
+)
+def test_replay_after_crash_inside_two_month_publish(spark, monkeypatch, crash_at):
+    """A two-month batch crashes inside the 1m level's publish.  The
+    replay rolls the stage forward, converges, and leaves the idle
+    month's files byte-identical in every level."""
+    import trade_data_collection_service_spark.streaming.pipeline as P
+
+    dirs = tempfile.mkdtemp(prefix="stream_swap_")
+    try:
+        raw_path, months = _three_month_history(spark, dirs)
+        paths = rollup_paths(dirs)
+        before = {m: _snapshot(paths[m]) for m in LEVELS}
+
+        # Jan revision + new Mar candle; Feb idle
+        batch2 = spark.createDataFrame(
+            [
+                _candle("BTC-USDT", months[1], 555.0, version=3),
+                _candle("BTC-USDT", months[3] + dt.timedelta(minutes=90), 777.0),
+            ],
+            CANDLE_SCHEMA,
+        )
+        batch2.write.mode("append").parquet(raw_path)
+
+        real_fs_for = P._fs_for
+        calls = [0]
+
+        def crashing_fs_for(spark_, path):
+            fs, hpath = real_fs_for(spark_, path)
+            return _PublishCrash(fs, calls, crash_at), hpath
+
+        monkeypatch.setattr(P, "_fs_for", crashing_fs_for)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            upsert_rollup_levels(spark, raw_path, batch2, dirs, LEVELS)
+        monkeypatch.undo()
+
+        stage = paths[LEVELS[0]] + ".stage"
+        assert os.path.exists(os.path.join(stage, "_SUCCESS"))
+        staged = [d for d in os.listdir(stage) if d.startswith("month=")]
+        live = [d for d in os.listdir(paths[LEVELS[0]]) if d.startswith("month=")]
+        assert (len(staged), len(live)) == ((2, 2) if crash_at == 1 else (1, 3))
+
+        upsert_rollup_levels(spark, raw_path, batch2, dirs, LEVELS)
+        _assert_converged(spark, raw_path, dirs)
+        for m in LEVELS:
+            after = _snapshot(paths[m])
+            for mm, changed in (("202401", True), ("202402", False), ("202403", True)):
+                b = {k: v for k, v in before[m].items() if f"month={mm}" in k}
+                a = {k: v for k, v in after.items() if f"month={mm}" in k}
+                if changed:
+                    assert a != b, f"level {m}: month {mm} should be rewritten"
+                else:
+                    assert a == b, f"level {m}: idle month {mm} was rewritten"
+        # the untouched ETH buckets of the touched months survived
+        stored = read_rollup_level(spark, paths[LEVELS[0]])
+        assert stored.filter("symbol = 'ETH-USDT'").count() == 60
+    finally:
+        shutil.rmtree(dirs, ignore_errors=True)
+
+
+def _scan_lines(plan: str, path: str) -> list[str]:
+    """The FileScan lines of a plan string that read the table at ``path``."""
+    return [
+        ln for ln in plan.splitlines() if "FileScan" in ln and f"{path}]" in ln
+    ]
+
+
+def test_level_reads_are_month_pruned(spark, monkeypatch):
+    """Each level's stage write reads its own stored rows (the keep
+    set) and the level below (the source) through a partition filter
+    on ``month``, so untouched months' files are never opened."""
+    import trade_data_collection_service_spark.streaming.pipeline as P
+
+    dirs = tempfile.mkdtemp(prefix="prune_")
+    try:
+        raw_path, months = _three_month_history(spark, dirs)
+        batch2 = spark.createDataFrame(
+            [_candle("BTC-USDT", months[2] + dt.timedelta(minutes=4), 9.0, version=2)],
+            CANDLE_SCHEMA,
+        )
+        batch2.write.mode("append").parquet(raw_path)
+
+        plans = {}
+        real_write_stage = P._write_stage
+
+        def capture(df, ts_col, stage):
+            plans[stage] = df._jdf.queryExecution().executedPlan().toString()
+            real_write_stage(df, ts_col, stage)
+
+        monkeypatch.setattr(P, "_write_stage", capture)
+        upsert_rollup_levels(spark, raw_path, batch2, dirs, LEVELS)
+
+        paths = rollup_paths(dirs)
+        for i, m in enumerate(LEVELS):
+            plan = plans[paths[m] + ".stage"]
+            reads = [paths[m]] + ([paths[LEVELS[i - 1]]] if i else [])
+            for path in reads:
+                scans = _scan_lines(plan, path)
+                assert scans, f"level {m}: no scan of {path}"
+                for ln in scans:
+                    filters = ln.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
+                    assert "month" in filters and "202402" in filters, ln
+        _assert_converged(spark, raw_path, dirs)
+    finally:
+        shutil.rmtree(dirs, ignore_errors=True)
+
+
+@pytest.mark.parametrize("levels", [[1, 7], [1, 5, 2880]])
+def test_levels_must_divide_a_day(spark, levels):
+    """Month pruning is exact only when no bucket spans a day edge, so
+    levels that do not divide 1440 are rejected before any write."""
+    dirs = tempfile.mkdtemp(prefix="stream_levels_")
+    try:
+        batch = spark.createDataFrame(
+            [_candle("BTC-USDT", dt.datetime(2024, 1, 10, 12, 0, tzinfo=UTC), 1.0)],
+            CANDLE_SCHEMA,
+        )
+        with pytest.raises(ValueError, match="1440"):
+            upsert_rollup_levels(spark, batch, batch, dirs, levels)
+        assert os.listdir(dirs) == []
+    finally:
+        shutil.rmtree(dirs, ignore_errors=True)
+
+
+def test_raw_and_batch_may_be_one_frame(spark):
+    """A backfill passes the same frame as raw and as the batch; the
+    touched-key joins must still match rows by value, not collapse
+    into a self-join."""
+    dirs = tempfile.mkdtemp(prefix="stream_selfjoin_")
+    try:
+        t0 = dt.datetime(2024, 1, 31, 23, 50, tzinfo=UTC)  # spans a month edge
+        batch = spark.createDataFrame(
+            [_candle("BTC-USDT", t0 + dt.timedelta(minutes=i), 10.0 + i) for i in range(20)]
+            + [_candle("BTC-USDT", t0, 99.0, version=1)],
+            CANDLE_SCHEMA,
+        )
+        upsert_rollup_levels(spark, batch, batch, dirs, LEVELS)
+        expected = cascade(dedup_latest(batch), LEVELS)
+        paths = rollup_paths(dirs)
+        for m in LEVELS:
+            stored = read_rollup_level(spark, paths[m])
+            assert stored.exceptAll(expected[m]).count() == 0
+            assert expected[m].exceptAll(stored).count() == 0
+    finally:
+        shutil.rmtree(dirs, ignore_errors=True)

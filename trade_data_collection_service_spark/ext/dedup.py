@@ -588,10 +588,15 @@ def _local_lease_path(path: str) -> str | None:
     urllib so an authority-bearing URI (``file://host/tmp/x``) falls
     through to Hadoop instead of silently becoming the wrong local
     path ``/host/tmp/x``; an empty or ``localhost`` authority is the
-    local filesystem by RFC 8089 and resolves to the URI path."""
+    local filesystem by RFC 8089 and resolves to the URI path.  A
+    ``?`` or ``#`` also falls through: urllib would split it off as a
+    query or fragment, while Hadoop's Path keeps it in the file name,
+    so the two paths would take different lease files."""
     if path.startswith("file:"):
         from urllib.parse import unquote, urlsplit
 
+        if "?" in path or "#" in path:
+            return None  # Hadoop reads these as file-name characters
         parts = urlsplit(path)
         if parts.netloc not in ("", "localhost"):
             return None  # remote authority: not this filesystem
@@ -1293,8 +1298,8 @@ def write_neardup_index(docs: DataFrame, path: str) -> None:
         for t in ("shingles", "bands", "counts"):
             _retire_stage(spark, f"{path}/{t}.stage")
         # explicit STATIC overwrite (r11 review): a rebuild must wipe
-        # stale batch partitions even when another component has set
-        # the session-global partitionOverwriteMode to dynamic
+        # stale batch partitions whatever the caller's session sets
+        # partitionOverwriteMode to (no component here sets it)
         ex.write.partitionBy("batch").mode("overwrite").option(
             "partitionOverwriteMode", "static"
         ).parquet(f"{path}/shingles")

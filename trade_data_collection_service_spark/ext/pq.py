@@ -533,19 +533,22 @@ def _ivfpq_rows(
     unchanged (same winners; the pivot's first(code) was over exactly
     one row per (vec_id, subspace))."""
     codes = _code_exprs(codebooks, m)
+    # a subspace absent from the codebooks gets a null code typed as
+    # the cluster column, so the index frame stays writable
+    ktype = dict(codebooks.dtypes)["cluster"]
     w, n, ctype = _bucket_expr(centroids)
     if not n:
         return source.select(
             "vec_id",
-            *[F.lit(None).alias(f"code{j}") for j in range(m)],
+            *[F.lit(None).cast(ktype).alias(f"code{j}") for j in range(m)],
             F.lit(None).cast(ctype).alias("bucket"),
         ).filter(F.lit(False))
     return source.select(
         "vec_id",
         *[
-            (codes[j] if codes[j] is not None else F.lit(None)).alias(
-                f"code{j}"
-            )
+            (
+                codes[j] if codes[j] is not None else F.lit(None).cast(ktype)
+            ).alias(f"code{j}")
             for j in range(m)
         ],
         w.alias("w"),

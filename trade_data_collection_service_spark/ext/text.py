@@ -1642,8 +1642,8 @@ def write_nb_index(
 
         def _write_base(df: DataFrame, table: str) -> None:
             # explicit STATIC overwrite: a rebuild must wipe stale
-            # batch partitions even if some other component set the
-            # session's partitionOverwriteMode to dynamic
+            # batch partitions whatever the caller's session sets
+            # partitionOverwriteMode to (no component here sets it)
             (
                 df.withColumn("batch", F.lit("base"))
                 .write.mode("overwrite")
@@ -2023,10 +2023,9 @@ def write_bm25_index(docs: DataFrame, path: str) -> None:
 
         def _write_base(df: DataFrame, table: str) -> None:
             # explicit STATIC overwrite: a rebuild must wipe stale
-            # batch partitions even in a session where some other
-            # component set the global partitionOverwriteMode to
-            # dynamic (r11 review — sources/tables.compact does
-            # exactly that)
+            # batch partitions whatever the caller's session sets
+            # partitionOverwriteMode to (no component here sets it;
+            # sources/tables.compact publishes by rename)
             (
                 df.withColumn("batch", F.lit("base"))
                 .write.mode("overwrite")

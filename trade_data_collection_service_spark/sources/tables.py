@@ -75,37 +75,26 @@ def compact(spark: SparkSession, path: str, months: list[str] | None = None) -> 
     — OPTIMIZE FINAL.  Repairs after gap refill keep windows
     partition-aligned to bound rewrite cost (SURVEY.md §7).
 
-    Publish protocol (ADVICE r1): the compacted months are first
-    materialized to a sibling ``.stage`` directory, then written into
-    the live table with dynamic partition overwrite.  Reading and
-    overwriting the same path in one job is fragile (it only worked
-    because the repartition happened to materialize a shuffle before
-    the commit), and a crash mid-commit would lose the partitions
-    being rewritten; with the stage step a pre-publish crash leaves
-    the table untouched, and a mid-publish crash is repaired by
-    re-running compact() on the same months from the intact raw
-    versions in stage-input history (same two-step as
-    streaming.pipeline.upsert_rollup_levels)."""
-    from trade_data_collection_service_spark.streaming.pipeline import _rm
+    Publish protocol: the same stage-then-rename WAL as
+    streaming.pipeline.upsert_rollup_levels.  The compacted months are
+    first materialized to a sibling ``.stage`` directory, then each
+    staged month directory replaces its live counterpart by rename.
+    Reading and overwriting the same path in one job is fragile, and
+    with the stage a pre-publish crash leaves the table untouched,
+    while a crash mid-publish is rolled forward from the stage by the
+    next compact() on the table.  No session conf is changed."""
+    from trade_data_collection_service_spark.streaming.pipeline import (
+        _publish_stage,
+        _recover_stage,
+        _rm,
+        _write_stage,
+    )
 
+    stage = path + ".stage"
+    _recover_stage(spark, stage, path)
     df = spark.read.parquet(path)
     if months:
         df = df.filter(df["month"].isin(months))
-    deduped = dedup_latest(df.drop("month"))
-    stage = path + ".stage"
-    (
-        deduped.withColumn("month", yyyymm("start"))
-        .repartition("month")
-        .sortWithinPartitions("exchange", "symbol", "start")
-        .write.mode("overwrite")
-        .partitionBy("month")
-        .parquet(stage)
-    )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    (
-        spark.read.parquet(stage)
-        .write.mode("overwrite")
-        .partitionBy("month")
-        .parquet(path)
-    )
+    _write_stage(dedup_latest(df.drop("month")), "start", stage)
+    _publish_stage(spark, stage, path)
     _rm(spark, stage)

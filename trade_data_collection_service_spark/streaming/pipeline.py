@@ -37,8 +37,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from trade_data_collection_service_spark.functions.timeutil import bucket_start, yyyymm
 from trade_data_collection_service_spark.operators.dedup import dedup_latest
@@ -48,7 +49,9 @@ from trade_data_collection_service_spark.operators.rollup import (
 )
 from trade_data_collection_service_spark.operators.validate import validate
 from trade_data_collection_service_spark.schema import (
+    CANDLE_SCHEMA,
     ROLLUP_MINUTES,
+    ROLLUP_SCHEMA,
     cascade_specs,
 )
 
@@ -80,24 +83,52 @@ def _rm(spark: SparkSession, path: str) -> None:
         fs.delete(hpath, True)
 
 
-def _publish_stage(spark: SparkSession, stage: str, path: str) -> None:
-    """Publish a fully-staged level table into the live path, rewriting
-    only the month partitions present in the stage (dynamic partition
-    overwrite).  Isolated as a function so crash tests can inject a
-    failure at the stage/publish boundary.
+def _write_stage(df: DataFrame, ts_col: str, stage: str) -> None:
+    """Materialize ``df`` as a complete ``partitionBy(month)`` table at
+    ``stage``, sorted within each month by (exchange, symbol,
+    ``ts_col``) — the layout every level and raw table is stored in.
 
-    The overwrite mode is a per-write OPTION, not a session conf:
-    mutating ``spark.sql.sources.partitionOverwriteMode`` globally
-    leaks dynamic-overwrite semantics into every later write in the
-    session (and under dynamic mode the committer skips the _SUCCESS
-    marker the stage WAL relies on)."""
+    The overwrite is static and a per-write option: the stage is
+    rebuilt whole whatever the session's ``partitionOverwriteMode``,
+    and the static committer writes the ``_SUCCESS`` marker that
+    :func:`_recover_stage` reads as the staged-complete WAL record."""
     (
-        spark.read.parquet(stage)
+        df.withColumn("month", yyyymm(ts_col))
+        .repartition("month")
+        .sortWithinPartitions("exchange", "symbol", ts_col)
         .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
+        .option("partitionOverwriteMode", "static")
         .partitionBy("month")
-        .parquet(path)
+        .parquet(stage)
     )
+
+
+def _publish_stage(spark: SparkSession, stage: str, path: str) -> None:
+    """Publish a fully-staged table into the live path by directory
+    renames: for each staged ``month=X``, delete the live ``month=X``
+    and rename the staged directory into its place.  Months absent
+    from the stage are not touched, and no data is rewritten.
+    Isolated as a function so crash tests can inject a failure at the
+    stage/publish boundary.
+
+    Every step is idempotent under a re-run: a month already moved is
+    gone from the stage, and a month whose live copy was deleted but
+    not yet replaced is still staged.  So re-running the publish after
+    a crash anywhere inside it completes the same moves
+    (:func:`_recover_stage`).  This relies on an atomic directory
+    rename (HDFS, local disk); on an object store the publish would be
+    a table-format commit (Delta/Iceberg ``replaceWhere``) instead."""
+    fs, hstage = _fs_for(spark, stage)
+    _, hpath = _fs_for(spark, path)
+    fs.mkdirs(hpath)
+    for status in fs.listStatus(hstage):
+        name = status.getPath().getName()
+        if not (status.isDirectory() and name.startswith("month=")):
+            continue
+        live = spark._jvm.org.apache.hadoop.fs.Path(hpath, name)
+        fs.delete(live, True)
+        if not fs.rename(status.getPath(), live):
+            raise IOError(f"publish rename failed: {stage}/{name} -> {path}/{name}")
 
 
 def _recover_stage(spark: SparkSession, stage: str, path: str) -> None:
@@ -115,13 +146,13 @@ def _recover_stage(spark: SparkSession, stage: str, path: str) -> None:
       table was never touched, so discard the partial stage and let
       the replayed batch restage from scratch;
     - stage dir WITH ``_SUCCESS``: crash between stage completion and
-      publish completion.  The live table's touched months may be
-      partially written (a dynamic-overwrite job commit is not atomic
-      on plain parquet), and the kept-untouched-bucket rows for those
-      months exist ONLY in the stage — so republish the stage first,
+      publish completion.  Some touched months may already be swapped
+      in, one may be deleted from the live table and not yet replaced,
+      and the kept-untouched-bucket rows of the rest exist ONLY in the
+      stage — so finish the publish (its moves are idempotent),
       restoring the invariant that the live table is whole, then
-      delete it.  The replayed batch then recomputes the same months
-      idempotently.
+      delete the stage.  The replayed batch then recomputes the same
+      months idempotently.
 
     Without this roll-forward, replay-after-mid-publish-crash could
     lose untouched buckets in touched months: the replay's keep-set is
@@ -133,11 +164,37 @@ def _recover_stage(spark: SparkSession, stage: str, path: str) -> None:
     _rm(spark, stage)
 
 
-def read_rollup_level(spark: SparkSession, path: str) -> DataFrame:
+# A level table as stored: the rollup schema plus its month partition
+# column ("yyyyMM" strings, as written by _write_stage).
+_LEVEL_SCHEMA = T.StructType(
+    ROLLUP_SCHEMA.fields + [T.StructField("month", T.StringType())]
+)
+
+
+def read_rollup_level(
+    spark: SparkSession, path: str, months: list[str] | None = None
+) -> DataFrame:
     """Read a rollup level table, hiding the physical ``month``
-    partition column (layout detail, not part of the rollup schema)."""
-    df = spark.read.parquet(path)
-    return df.drop("month") if "month" in df.columns else df
+    partition column (layout detail, not part of the rollup schema).
+
+    The schema is declared, not inferred, so the read launches no
+    footer-reading job.  ``months`` ("yyyyMM" strings) restricts the
+    read to those month partitions: a partition filter, so the files
+    of every other month are never opened."""
+    df = spark.read.schema(_LEVEL_SCHEMA).parquet(path)
+    if months is not None:
+        df = df.filter(F.col("month").isin(months))
+    return df.drop("month")
+
+
+def _covers(bucket: Column) -> Column:
+    """Join condition matching a row's (exchange, symbol, ``bucket``)
+    to a touched-bucket row, whose columns carry a ``__t_`` prefix."""
+    return (
+        (F.col("exchange") == F.col("__t_exchange"))
+        & (F.col("symbol") == F.col("__t_symbol"))
+        & (bucket == F.col("__t_bucket"))
+    )
 
 
 def upsert_rollup_levels(
@@ -159,120 +216,126 @@ def upsert_rollup_levels(
     ReplacingMergeTree dedup + watchdog recompute,
     data_quality_check.py:391-485; we get it in-line).
 
-    Work per batch is O(touched buckets) compute and O(touched month
-    partitions) I/O, independent of history:
-    - level 1m reads the deduped raw rows for the batch's buckets
-      (partition pruning + sorted row groups make this a point read);
-    - level N reads the level-N-1 table rows covering its touched
-      buckets (a coarser, smaller key set each step);
-    - each level table is stored ``partitionBy(month)`` (the
-      reference's toYYYYMM partitioning, clickhouse_schema.py:144) and
-      only the month partitions containing touched buckets are
-      rewritten, via dynamic partition overwrite — untouched history
-      is never read or written.
+    ``batch_1m`` only names the touched (exchange, symbol, start) keys,
+    so it may hold duplicate versions; its rows must already be in
+    raw.
 
-    Publish protocol per level: the touched months' new contents
-    (kept untouched buckets + recomputed buckets) are first
-    materialized to a sibling ``.stage`` directory, then written into
-    the live table with ``partitionOverwriteMode=dynamic``.  The stage
-    step is deliberate: it removes the read-from/write-to-same-path
-    hazard, and a crash before the publish leaves the live table
-    untouched (the checkpoint replays the batch).  A crash *during*
-    the publish job-commit is bounded to the touched month partitions,
-    which the replayed batch fully rewrites from the stage inputs
-    recomputed off the (idempotent, append-only) raw table — so replay
-    still converges.  On a transactional table format (Delta/Iceberg)
-    the publish becomes a single replaceWhere commit.
+    Each level table is stored ``partitionBy(month)`` (the reference's
+    toYYYYMM partitioning, clickhouse_schema.py:144).  The batch's
+    touched months are collected once; every level read is then a
+    ``month IN (...)`` partition filter:
+    - level 1m reads the deduped raw rows for the batch's buckets.
+      The parquet sink's raw table is an unpartitioned append-only
+      table, so this scans it whole: O(raw history);
+    - level N reads the touched months of level N-1 and keeps the
+      rows covering its touched buckets;
+    - each level rewrites only its touched month partitions, from its
+      own touched months' stored rows (kept untouched buckets) plus
+      the recomputed buckets.  Untouched months are never read or
+      written.
+    Month pruning is exact only because every level divides a day, so
+    no bucket spans a month edge; other levels raise ``ValueError``.
+
+    Publish protocol per level: the touched months' new contents are
+    first materialized to a sibling ``.stage`` directory (the only
+    write), then each staged month directory replaces its live
+    counterpart by rename (:func:`_publish_stage`).  The stage step
+    removes the read-from/write-to-same-path hazard, and it is the
+    publish's write-ahead record: a crash before the publish leaves
+    the live table untouched (the checkpoint replays the batch), and
+    a crash during it is rolled forward from the stage on replay
+    (:func:`_recover_stage`).  On a transactional table format
+    (Delta/Iceberg) the publish becomes a single replaceWhere commit.
+
+    Spark jobs are described ``"<prefix> L<m>"`` per level, where the
+    prefix is the caller's job description (the stream sink sets
+    ``"candles batch <id>"``); the caller's description is restored on
+    return.
     """
     minutes = minutes or ROLLUP_MINUTES
+    uneven = [m for m in minutes if 1440 % m]
+    if uneven:
+        raise ValueError(
+            f"rollup levels {uneven} do not divide 1440: their buckets "
+            "can span a month edge, which month-pruned reads would miss"
+        )
     paths = rollup_paths(base_dir)
-    bucket_keys = ["exchange", "symbol", "candle_start"]
+    sc = spark.sparkContext
+    caller_desc = sc.getLocalProperty("spark.job.description")
+    prefix = caller_desc or "rollup upsert"
 
-    # Touched 1m buckets from this batch.
-    touched = (
-        batch_1m.select(
-            "exchange",
-            "symbol",
-            bucket_start("start", minutes[0]).alias("candle_start"),
-        )
-        .distinct()
-        .cache()
+    # Touched finest-level buckets from this batch.  They only feed
+    # semi/anti joins, where duplicates do not matter, so no distinct
+    # (and no shuffle) is needed.
+    touched = batch_1m.select(
+        "exchange",
+        "symbol",
+        bucket_start("start", minutes[0]).alias("candle_start"),
     )
-    source = None  # level below's full (fresh) table
-    for i, m in enumerate(minutes):
-        path = paths[m]
-        # Replay safety: finish (or discard) any interrupted publish
-        # from a crashed previous run before reading the live table.
-        _recover_stage(spark, path + ".stage", path)
-        # Coarsen the touched-bucket set to this level's grid.
-        prev_touched = touched
-        touched = (
-            prev_touched.select(
-                "exchange",
-                "symbol",
-                bucket_start("candle_start", m).alias("candle_start"),
-            ).distinct()
-        ).cache()
-        if i == 0:
-            raw_df = (
-                raw_path
-                if isinstance(raw_path, DataFrame)
-                else spark.read.parquet(raw_path)
-            )
-            raw = dedup_latest(raw_df)
-            rows = raw.join(
-                F.broadcast(touched).withColumnRenamed("candle_start", "start"),
-                ["exchange", "symbol", "start"],
-                "left_semi",
-            )
-            recomputed = rollup_raw(rows, m)
-        else:
-            # covering join expressed as semi-join on the coarse bucket
-            rows = source.withColumn(
-                "__cb", bucket_start("candle_start", m)
-            ).join(
-                F.broadcast(touched.withColumnRenamed("candle_start", "__cb")),
-                ["exchange", "symbol", "__cb"],
-                "left_semi",
-            ).drop("__cb")
-            recomputed = rollup_reagg(rows, m)
-        if table_exists(spark, path):
-            # Rewrite ONLY month partitions containing touched buckets:
-            # within those months, keep the untouched buckets' stored
-            # rows and splice in the recomputed ones.
-            touched_months = (
-                touched.select(yyyymm("candle_start").alias("month")).distinct()
-            )
-            stored = read_rollup_level(spark, path)
-            keep = (
-                stored.withColumn("month", yyyymm("candle_start"))
-                .join(F.broadcast(touched_months), ["month"], "left_semi")
-                .drop("month")
-                .join(F.broadcast(touched), bucket_keys, "left_anti")
-            )
-            out = keep.unionByName(recomputed)
-        else:
-            out = recomputed
-        stage = path + ".stage"
-        (
-            out.withColumn("month", yyyymm("candle_start"))
-            .repartition("month")
-            .sortWithinPartitions("exchange", "symbol", "candle_start")
-            .write.mode("overwrite")
-            # static full-dir overwrite: the stage is rebuilt whole,
-            # and the static committer writes the _SUCCESS marker that
-            # _recover_stage uses as the staged-complete WAL record
-            .option("partitionOverwriteMode", "static")
-            .partitionBy("month")
-            .parquet(stage)
+    try:
+        # The batch's months: the same at every level, since no bucket
+        # spans a day.  coalesce(1) lets the distinct run map-side.
+        sc.setJobDescription(f"{prefix} months")
+        months = sorted(
+            r["month"]
+            for r in touched.select(yyyymm("candle_start").alias("month"))
+            .coalesce(1)
+            .distinct()
+            .collect()
         )
-        _publish_stage(spark, stage, path)
-        _rm(spark, stage)
-        # `touched` is materialized by the writes above; the finer
-        # level's cache is no longer referenced.
-        prev_touched.unpersist()
-        source = read_rollup_level(spark, path)
-    touched.unpersist()
+        source = None  # level below, restricted to the touched months
+        for i, m in enumerate(minutes):
+            sc.setJobDescription(f"{prefix} L{m}")
+            path = paths[m]
+            stage = path + ".stage"
+            # Replay safety: finish (or discard) any interrupted publish
+            # from a crashed previous run before reading the live table.
+            _recover_stage(spark, stage, path)
+            # The level's touched buckets, broadcast to the semi and
+            # anti joins.  Their own column names keep the conditions
+            # unambiguous when the batch and raw frames share a lineage.
+            level_touched = F.broadcast(
+                touched.select(
+                    F.col("exchange").alias("__t_exchange"),
+                    F.col("symbol").alias("__t_symbol"),
+                    bucket_start("candle_start", m).alias("__t_bucket"),
+                )
+            )
+            if i == 0:
+                raw_df = (
+                    raw_path
+                    if isinstance(raw_path, DataFrame)
+                    else spark.read.schema(CANDLE_SCHEMA).parquet(raw_path)
+                )
+                # Filtering on key columns commutes with the dedup, so
+                # only the touched keys' versions are deduped.  One
+                # (exchange, symbol) shuffle serves both aggregations.
+                rows = raw_df.join(
+                    level_touched, _covers(F.col("start")), "left_semi"
+                ).repartition("exchange", "symbol")
+                recomputed = rollup_raw(dedup_latest(rows), m)
+            else:
+                # covering join expressed as semi-join on the coarse bucket
+                rows = source.join(
+                    level_touched,
+                    _covers(bucket_start("candle_start", m)),
+                    "left_semi",
+                )
+                recomputed = rollup_reagg(rows, m)
+            out = recomputed
+            if table_exists(spark, path):
+                # Within the touched months, keep the untouched buckets'
+                # stored rows and splice in the recomputed ones.
+                keep = read_rollup_level(spark, path, months).join(
+                    level_touched, _covers(F.col("candle_start")), "left_anti"
+                )
+                out = keep.unionByName(recomputed)
+            _write_stage(out, "candle_start", stage)
+            _publish_stage(spark, stage, path)
+            _rm(spark, stage)
+            source = read_rollup_level(spark, path, months)
+    finally:
+        sc.setJobDescription(caller_desc)
 
 
 def start_candle_stream(
@@ -299,7 +362,6 @@ def start_candle_stream(
     ``available_now`` processes the current backlog then stops —
     the replayable-test mode; production uses a continuous trigger.
     """
-    from trade_data_collection_service_spark.schema import CANDLE_SCHEMA
     from trade_data_collection_service_spark.streaming.sinks import (
         ParquetCandleWriter,
     )
@@ -324,9 +386,17 @@ def start_candle_stream(
     )
 
     def sink(batch: DataFrame, batch_id: int) -> None:
+        # Tag this batch's jobs; upsert_rollup_levels adds " L<m>" per
+        # level.  The stream's own description is restored after.
+        sc = batch.sparkSession.sparkContext
+        stream_desc = sc.getLocalProperty("spark.job.description")
+        # cached: every re-read of ``batch`` would re-read the source
+        # files and re-count the batch's input rows
         b = dedup_latest(batch).cache()
         try:
+            sc.setJobDescription(f"candles batch {batch_id} raw")
             writer.write_raw(b)
+            sc.setJobDescription(f"candles batch {batch_id}")
             upsert_rollup_levels(
                 batch.sparkSession,
                 writer.read_raw(batch.sparkSession),
@@ -335,6 +405,7 @@ def start_candle_stream(
                 minutes,
             )
         finally:
+            sc.setJobDescription(stream_desc)
             b.unpersist()
 
     stream_writer = stream.writeStream.option(

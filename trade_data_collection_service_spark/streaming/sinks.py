@@ -34,6 +34,8 @@ from typing import Protocol
 
 from pyspark.sql import DataFrame, SparkSession
 
+from trade_data_collection_service_spark.schema import CANDLE_SCHEMA
+
 _TS_COLS = ("start", "stop", "timestamp", "receipt_timestamp")
 _COLS = (
     "exchange",
@@ -72,7 +74,8 @@ class ParquetCandleWriter:
         batch.write.mode("append").parquet(self.raw_path)
 
     def read_raw(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.raw_path)
+        # declared schema: no footer-reading inference job per call
+        return spark.read.schema(CANDLE_SCHEMA).parquet(self.raw_path)
 
 
 def _upsert_rows(db_path: str, table: str, rows) -> None:
@@ -142,8 +145,6 @@ class SqlUpsertCandleWriter:
         batch.foreachPartition(lambda rows: _upsert_rows(db_path, table, rows))
 
     def read_raw(self, spark: SparkSession) -> DataFrame:
-        from trade_data_collection_service_spark.schema import CANDLE_SCHEMA
-
         con = sqlite3.connect(self.db_path, timeout=120)
         try:
             cur = con.execute(
